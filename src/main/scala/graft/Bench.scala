@@ -6,7 +6,8 @@ package graft
   * Since round 12 the PRIMARY timed layout is an 8-file rewrite of
   * SPARK_GRAFT_SF_DIR (built fresh under /tmp each run): the driver
   * fixture is one row group per table, a structural 1-task-scan floor
-  * (measured 1.7×/2.8× — BASELINE.md BenchScan) that real many-file
+  * (measured 1.7×/2.8× — BASELINE.md, the multi-row-group table under
+  * "Recorded bench (round 2)") that real many-file
   * data doesn't have. The single-file layout is still timed and
   * recorded as `value_singlefile`/`queries_singlefile` for continuity
   * with rounds ≤11.
@@ -193,7 +194,8 @@ object Bench {
     // PRIMARY layout = the 8-file rewrite (VERDICT r11 #3): the
     // driver's single-file fixture is one row group per table, so every
     // scan is structurally a 1-task stage — a measured 1.7× total /
-    // 2.8× scan-bound floor (BASELINE.md BenchScan) that misattributes
+    // 2.8× scan-bound floor (BASELINE.md, the multi-row-group table
+    // under "Recorded bench (round 2)") that misattributes
     // fixture layout to the plans. Real data has many files; the
     // primary column should reflect the plans. The single-file run
     // stays as a SECONDARY column for cross-round continuity.

@@ -77,7 +77,7 @@ object GraftSession {
   }
 
   /** Recursive local-file delete shared by the harness mains' scratch
-    * cleanup (Verify's failed-write removal, Bench/BenchScan/DedupScale
+    * cleanup (Verify's failed-write removal, Bench/DedupScale
     * pid-scoped rewrites, Relational's roundtrip shutdown hook) — ONE
     * implementation, previously copy-pasted in five files where a fix
     * to any copy would silently miss the others (r15 gate-tooling

@@ -432,7 +432,8 @@ object ModernSqlOps {
   /** q195's body with k exposed, returning the raw estimate next to
     * the exact intersection per event-type pair — shared by the gated
     * query (k=64, 35% tolerance), the NewOpsPropertySpec witness, and
-    * the KmvScale error-vs-k audit.
+    * the error-vs-k audit recorded in BASELINE.md ("KMV
+    * intersection-sketch error vs k").
     */
   private[graft] def kmvIntersect(
       s: SparkSession, dir: String, k: Int): DataFrame = {

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,5 +18,12 @@ object SparkSpec {
   // was pinned in GraftSession but absent in the copy), and every
   // future semantic conf added there must apply to specs too, or the
   // suite green-lights behavior production sessions don't have.
-  lazy val session: SparkSession = GraftSession.local(cores = 4, shufflePartitions = 4)
+  lazy val session: SparkSession = {
+    val s = GraftSession.local(cores = 4, shufflePartitions = 4)
+    // the global-window gate and its red-proofs plan unpartitioned
+    // windows on purpose; WindowExec's per-plan warning would flood
+    // the test log (GlobalWindowConventionSpec enforces the rule)
+    Configurator.setLevel("org.apache.spark.sql.execution.window.WindowExec", Level.ERROR)
+    s
+  }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{SparkEntry, SparkSpec}
+import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
@@ -65,7 +65,7 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType,
   */
 class ArrayOrderingConventionSpec extends SparkSpec {
 
-  private val sfDir = "/root/testdata/sf0.001"
+  import PlanCensus.sfDir
 
   /** query -> (why each pinned unproven array sort cannot place a NULL
     * divergently, the exact finding set excused) — the
@@ -349,21 +349,7 @@ class ArrayOrderingConventionSpec extends SparkSpec {
   // ---------------------------------------------------------------- //
 
   test("every declared query's array sorts are placement-safe or exempted with a reason") {
-    val offenders = SparkEntry.specs.flatMap { q =>
-      try {
-        val bad = offendingArraySorts(q.fn(spark, sfDir))
-        structurallySafeArraySort.get(q.name) match {
-          case None =>
-            if (bad.nonEmpty) Some(s"${q.name}: ${bad.toSeq.sorted.mkString(", ")}") else None
-          case Some((_, pinned)) =>
-            if (bad == pinned) None
-            else Some(s"${q.name}: exemption pins {${pinned.toSeq.sorted.mkString(", ")}} " +
-              s"but scan found {${if (bad.isEmpty) "nothing — dead entry" else bad.toSeq.sorted.mkString(", ")}}")
-        }
-      } catch {
-        case e: Throwable => Some(s"${q.name} (failed to analyze: ${e.getMessage.take(100)})")
-      }
-    }
+    val offenders = PlanCensus.gate(structurallySafeArraySort)(offendingArraySorts)
     assert(
       offenders.isEmpty,
       s"cross-engine divergent array-sort NULL placement (see the class-doc matrix): prove the " +

@@ -58,8 +58,6 @@ class CollectConventionSpec extends AnyFunSuite {
     // fixture-sized by the harness contract (sf0.01 inputs), plus the
     // single stop-shingle row
     ("StreamBench.scala", ".collect()"),
-    // KMV audit main: one row per (table-pair, k) — pairs × 3 rows
-    ("KmvScale.scala", ".collect()"),
   )
 
   /** How many sites each entry is expected to match (default 1) — the

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{SparkEntry, SparkSpec}
+import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
@@ -53,8 +53,6 @@ import org.apache.spark.sql.functions._
   * space should get a probe here.
   */
 class DivisionConventionSpec extends SparkSpec {
-
-  private val sfDir = "/root/testdata/sf0.001"
 
   /** query -> (why each pinned divisor is structurally non-zero, the
     * exact divisor-SQL set excused). Populated by the r17 triage of
@@ -614,21 +612,7 @@ class DivisionConventionSpec extends SparkSpec {
   }
 
   test("every declared query's array reads and string casts are ANSI-safe or exempted with a reason") {
-    val offenders = SparkEntry.specs.flatMap { q =>
-      try {
-        val bad = offendingAccess(q.fn(spark, sfDir))
-        structurallySafeAccess.get(q.name) match {
-          case None =>
-            if (bad.nonEmpty) Some(s"${q.name}: ${bad.toSeq.sorted.mkString(", ")}") else None
-          case Some((_, pinned)) =>
-            if (bad == pinned) None
-            else Some(s"${q.name}: exemption pins {${pinned.toSeq.sorted.mkString(", ")}} " +
-              s"but scan found {${if (bad.isEmpty) "nothing — dead entry" else bad.toSeq.sorted.mkString(", ")}}")
-        }
-      } catch {
-        case e: Throwable => Some(s"${q.name} (failed to analyze: ${e.getMessage.take(100)})")
-      }
-    }
+    val offenders = PlanCensus.gate(structurallySafeAccess)(offendingAccess)
     assert(
       offenders.isEmpty,
       s"ANSI-throwing array reads / string casts on data-dependent input (use try_element_at/" +
@@ -637,21 +621,7 @@ class DivisionConventionSpec extends SparkSpec {
   }
 
   test("every declared query's divisors are guarded or exempted with a reason") {
-    val offenders = SparkEntry.specs.flatMap { q =>
-      try {
-        val bad = offendingDivisors(q.fn(spark, sfDir))
-        structurallyNonzero.get(q.name) match {
-          case None =>
-            if (bad.nonEmpty) Some(s"${q.name}: ${bad.toSeq.sorted.mkString(", ")}") else None
-          case Some((_, pinned)) =>
-            if (bad == pinned) None
-            else Some(s"${q.name}: exemption pins {${pinned.toSeq.sorted.mkString(", ")}} " +
-              s"but scan found {${if (bad.isEmpty) "nothing — dead entry" else bad.toSeq.sorted.mkString(", ")}}")
-        }
-      } catch {
-        case e: Throwable => Some(s"${q.name} (failed to analyze: ${e.getMessage.take(100)})")
-      }
-    }
+    val offenders = PlanCensus.gate(structurallyNonzero)(offendingDivisors)
     assert(
       offenders.isEmpty,
       s"unguarded ANSI-throwing divisors (wrap in when(d =!= 0, ...)/nullif to match the " +

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{SparkEntry, SparkSpec}
+import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
@@ -75,7 +75,7 @@ import org.apache.spark.sql.functions._
   */
 class GlobalWindowConventionSpec extends SparkSpec {
 
-  private val sfDir = "/root/testdata/sf0.001"
+  import PlanCensus.sfDir
 
   /** query -> (why each pinned unproven global-window frame stays far
     * below the corpus, the exact finding set excused). Three of the
@@ -309,21 +309,7 @@ class GlobalWindowConventionSpec extends SparkSpec {
   // ---------------------------------------------------------------- //
 
   test("every declared query's unpartitioned windows run on provably bounded frames or are exempted with a reason") {
-    val offenders = SparkEntry.specs.flatMap { q =>
-      try {
-        val bad = offendingGlobalWindows(q.fn(spark, sfDir))
-        structurallyBounded.get(q.name) match {
-          case None =>
-            if (bad.nonEmpty) Some(s"${q.name}: ${bad.toSeq.sorted.mkString(", ")}") else None
-          case Some((_, pinned)) =>
-            if (bad == pinned) None
-            else Some(s"${q.name}: exemption pins {${pinned.toSeq.sorted.mkString(", ")}} " +
-              s"but scan found {${if (bad.isEmpty) "nothing — dead entry" else bad.toSeq.sorted.mkString(", ")}}")
-        }
-      } catch {
-        case e: Throwable => Some(s"${q.name} (failed to analyze: ${e.getMessage.take(100)})")
-      }
-    }
+    val offenders = PlanCensus.gate(structurallyBounded)(offendingGlobalWindows)
     assert(
       offenders.isEmpty,
       s"unpartitioned window over a frame the walk cannot bound — a single-partition sort of " +

@@ -89,7 +89,7 @@ import org.apache.spark.sql.functions._
   */
 class NullOrderingConventionSpec extends SparkSpec {
 
-  private val sfDir = "/root/testdata/sf0.001"
+  import PlanCensus.sfDir
 
   /** query -> (why each pinned NullsFirst key cannot carry a NULL, the
     * exact key-SQL set excused). Two of the three are CHECKPOINT
@@ -374,21 +374,7 @@ class NullOrderingConventionSpec extends SparkSpec {
   // ---------------------------------------------------------------- //
 
   test("every declared query's value-affecting NullsFirst sort keys are non-null-proven or exempted with a reason") {
-    val offenders = SparkEntry.specs.flatMap { q =>
-      try {
-        val bad = offendingSortKeys(q.fn(spark, sfDir))
-        structurallySafeOrder.get(q.name) match {
-          case None =>
-            if (bad.nonEmpty) Some(s"${q.name}: ${bad.toSeq.sorted.mkString(", ")}") else None
-          case Some((_, pinned)) =>
-            if (bad == pinned) None
-            else Some(s"${q.name}: exemption pins {${pinned.toSeq.sorted.mkString(", ")}} " +
-              s"but scan found {${if (bad.isEmpty) "nothing — dead entry" else bad.toSeq.sorted.mkString(", ")}}")
-        }
-      } catch {
-        case e: Throwable => Some(s"${q.name} (failed to analyze: ${e.getMessage.take(100)})")
-      }
-    }
+    val offenders = PlanCensus.gate(structurallySafeOrder)(offendingSortKeys)
     assert(
       offenders.isEmpty,
       s"cross-engine divergent NULL ordering on nullable sort keys (Spark NULLS FIRST, " +

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{SparkEntry, SparkSpec}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.types.{DoubleType, FloatType}
@@ -27,8 +28,6 @@ import org.apache.spark.sql.types.{DoubleType, FloatType}
   * reason — an entry without a reason is a defect, not an exemption.
   */
 class OracleConventionSpec extends SparkSpec {
-
-  private val sfDir = "/root/testdata/sf0.001"
 
   /** (a) exemptions: query -> why its unrounded double aggregate output
     * is hash-stable anyway. The operative fact: the driver's canonical
@@ -165,32 +164,23 @@ class OracleConventionSpec extends SparkSpec {
     m.toMap
   }
 
+  /** (a)'s detector: names of `df`'s DOUBLE output columns that carry
+    * an unrounded fold-order-sensitive aggregate, or come bare out of a
+    * lineage cut.
+    */
+  private[operators] def offendingDoubleOutputs(df: DataFrame): Set[String] = {
+    val plan = df.queryExecution.analyzed
+    val aliases = collectAliases(plan)
+    val rddIds = collectRddIds(plan)
+    plan.output.filter { a =>
+      (a.dataType == DoubleType || a.dataType == FloatType) &&
+      (aliases.get(a.exprId).exists(unroundedDoubleAgg(_, aliases, rddIds, 0)) ||
+        (!aliases.contains(a.exprId) && rddIds.contains(a.exprId)))
+    }.map(_.name).toSet
+  }
+
   test("(a) double aggregate outputs are rounded (driver hashes exactly)") {
-    val offenders = SparkEntry.specs.flatMap { q =>
-      try {
-        val plan = q.fn(spark, sfDir).queryExecution.analyzed
-        val aliases = collectAliases(plan)
-        val rddIds = collectRddIds(plan)
-        val bad = plan.output.filter { a =>
-          (a.dataType == DoubleType || a.dataType == FloatType) &&
-          (aliases.get(a.exprId).exists(unroundedDoubleAgg(_, aliases, rddIds, 0)) ||
-            (!aliases.contains(a.exprId) && rddIds.contains(a.exprId)))
-        }.map(_.name).toSet
-        exactFloatAllow.get(q.name) match {
-          case None =>
-            if (bad.nonEmpty) Some(s"${q.name}: ${bad.mkString(",")}") else None
-          case Some((_, pinned)) =>
-            // the exemption must excuse EXACTLY what the scan finds:
-            // zero offenders = dead entry, extras = a new unrounded
-            // column riding an old exemption
-            if (bad == pinned) None
-            else Some(s"${q.name}: exemption pins ${pinned.mkString(",")} " +
-              s"but scan found ${if (bad.isEmpty) "(nothing — dead entry)" else bad.mkString(",")}")
-        }
-      } catch {
-        case e: Throwable => Some(s"${q.name} (failed to analyze: ${e.getMessage.take(80)})")
-      }
-    }
+    val offenders = PlanCensus.gate(exactFloatAllow)(offendingDoubleOutputs)
     assert(
       offenders.isEmpty,
       s"unrounded fold-order-sensitive double aggregate outputs (wrap in round(_, 6) " +

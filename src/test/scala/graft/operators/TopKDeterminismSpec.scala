@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{SparkEntry, SparkSpec}
+import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -47,7 +47,7 @@ import org.apache.spark.sql.functions._
   */
 class TopKDeterminismSpec extends SparkSpec {
 
-  private val sfDir = "/root/testdata/sf0.001"
+  import PlanCensus.sfDir
 
   /** query -> (the functional-dependency reason the walk cannot see,
     * pinned finding set). All five are real total orders: either
@@ -205,21 +205,7 @@ class TopKDeterminismSpec extends SparkSpec {
   // ---------------------------------------------------------------- //
 
   test("every declared query's sort-backed limit cuts are provably deterministic or exempted with a reason") {
-    val offenders = SparkEntry.specs.flatMap { q =>
-      try {
-        val bad = offendingLimitCuts(q.fn(spark, sfDir))
-        structurallyTotal.get(q.name) match {
-          case None =>
-            if (bad.nonEmpty) Some(s"${q.name}: ${bad.toSeq.sorted.mkString(", ")}") else None
-          case Some((_, pinned)) =>
-            if (bad == pinned) None
-            else Some(s"${q.name}: exemption pins {${pinned.toSeq.sorted.mkString(", ")}} " +
-              s"but scan found {${if (bad.isEmpty) "nothing — dead entry" else bad.toSeq.sorted.mkString(", ")}}")
-        }
-      } catch {
-        case e: Throwable => Some(s"${q.name} (failed to analyze: ${e.getMessage.take(100)})")
-      }
-    }
+    val offenders = PlanCensus.gate(structurallyTotal)(offendingLimitCuts)
     assert(
       offenders.isEmpty,
       s"sort-backed LIMIT whose cut can tie: add a unique tie-break key to BOTH the Spark " +
