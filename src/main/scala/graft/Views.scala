@@ -5,6 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** SQL entry point: register every fixture table as a temp view (plus
   * the custom functions) so `spark.sql("...")` works over the engine's
   * data — the SQL surface SURVEY §2 declares on top of Catalyst.
+  * Pearson r in SQL is the built-in form of `pipeline.Network.pearson`,
+  * `try_divide(covar_samp(x, y), stddev_samp(x) * stddev_samp(y))`
+  * (NULL on a constant series, where `corr` throws under ANSI).
   */
 object Views {
   val tables: Seq[String] = Seq(
@@ -13,13 +16,7 @@ object Views {
 
   def register(spark: SparkSession, dir: String): Unit = {
     functions.GraftFunctions.ensureRegistered(spark)
-    functions.PearsonAgg.register(spark)
     functions.SimhashAggs.register(spark)
-    // the SQL surface gets the optimizer rules too — without this, an
-    // ad-hoc `levenshtein(a, b) <= k` over the views would run the
-    // full O(m·n) DP that FuzzyMatchRewrite exists to prevent,
-    // silently diverging from the GraftExtensions spark-submit route
-    plans.GraftRules.ensureInjected(spark)
     // existence via the path's OWN filesystem: java.io.File.exists is
     // false for every hdfs://a/s3a:// path, which would "successfully"
     // register zero views and surface as TABLE_OR_VIEW_NOT_FOUND far

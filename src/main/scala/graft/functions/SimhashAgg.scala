@@ -111,7 +111,7 @@ object SimhashAggs {
     override def outputEncoder: Encoder[java.lang.Long] = Encoders.LONG
   }
 
-  /** SQL registration, mirroring `pearson_udaf`: once per session
+  /** SQL registration: once per session
     * ([[GraftFunctions.oncePerSession]] for the guard's contract).
     */
   def register(spark: SparkSession): Unit =

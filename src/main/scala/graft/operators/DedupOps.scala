@@ -624,10 +624,6 @@ object DedupOps {
       // the oracle is exact over the same candidate set.
       "q92_fuzzy_dedup",
       (s, dir) => {
-        // injects FuzzyMatchRewrite: the levenshtein <= 14 predicate
-        // optimizes to a length-difference guard + the banded
-        // (thresholded) DP — see graft.plans.FuzzyMatchRewrite
-        graft.plans.GraftRules.ensureInjected(s)
         val banded = fuzzyBlocks(s, dir)
         banded.as("a")
           .join(
@@ -639,8 +635,12 @@ object DedupOps {
             col("a.doc_id").as("da"), col("b.doc_id").as("db"),
             col("a.p").as("pa"), col("b.p").as("pb"))
           .distinct() // a pair may collide on several bands
-          .withColumn("dist", levenshtein(col("pa"), col("pb")).cast("bigint"))
-          .filter(col("dist") <= 14)
+          // |len(a) − len(b)| > 14 implies distance > 14: the O(1)
+          // length guard short-circuits before the DP. The thresholded
+          // levenshtein runs the banded DP — O(k·min(m,n)) cells, not
+          // O(m·n) — and is -1 past k, exact at or below it
+          .withColumn("dist", levenshtein(col("pa"), col("pb"), 14).cast("bigint"))
+          .filter(abs(length(col("pa")) - length(col("pb"))) <= 14 && col("dist") >= 0)
           .select(col("da"), col("db"), col("dist"))
       },
       Some(

@@ -67,7 +67,7 @@ object PipelineOps {
           .select(col("pi"), col("pj"), round(col("r"), 6).as("r")),
       Some(
         // DuckDB's corr() on the sample-aligned self-join is the same
-        // statistic pearsonEdges computes from raw sums
+        // statistic pearsonEdges computes from the co-moments
         "SELECT a.l_linenumber AS pi, b.l_linenumber AS pj, " +
           "round(corr(a.l_quantity, b.l_quantity), 6) AS r " +
           "FROM lineitem a JOIN lineitem b " +

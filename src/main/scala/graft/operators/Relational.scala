@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QuerySpec, Tables}
+import graft.pipeline.Network.pearson
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -1286,8 +1287,8 @@ object Relational {
         t(s, dir, "lineitem")
           .groupBy("l_returnflag")
           .agg(
-            round(corr(col("l_quantity"), col("l_extendedprice")), 6).as("r_qty_price"),
-            round(corr(col("l_discount"), col("l_tax")), 6).as("r_disc_tax")),
+            round(pearson(col("l_quantity"), col("l_extendedprice")), 6).as("r_qty_price"),
+            round(pearson(col("l_discount"), col("l_tax")), 6).as("r_disc_tax")),
       Some(
         "SELECT l_returnflag, " +
           "round(corr(l_quantity, l_extendedprice), 6) AS r_qty_price, " +

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QuerySpec, Tables}
+import graft.pipeline.Network.pearson
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -252,7 +253,8 @@ object StatsOps {
       // traffic?"). Daily per-type totals fold combinably; the
       // days-sized frame then self-joins on the day key (type-pair ×
       // days rows, bounded by 5²·days — never corpus-shaped) and each
-      // pair folds through the corr() moment aggregate in one pass.
+      // pair folds through the co-moment aggregates in one pass
+      // (Network.pearson: NULL r, not a throw, on a constant series).
       // Deterministic pair orientation (ta < tb) halves the matrix.
       "q193_metric_corr",
       (s, dir) => {
@@ -266,7 +268,7 @@ object StatsOps {
           .groupBy("ta", "tb")
           .agg(
             count(lit(1)).as("n_days"),
-            round(corr(col("va"), col("vb")), 4).as("r"))
+            round(pearson(col("va"), col("vb")), 4).as("r"))
       },
       Some(
         "WITH daily AS (SELECT CAST(ts AS DATE) AS d, event_type, " +

@@ -26,8 +26,6 @@ import org.apache.spark.sql.types._
   */
 object Ingest {
 
-  final case class MatrixEntry(sample: Int, probe: Int, value: Double)
-
   final case class IngestResult(
       matrix: DataFrame, // (sample INT, probe INT, value DOUBLE)
       sampleDict: DataFrame, // (name STRING, sample INT)
@@ -91,19 +89,6 @@ object Ingest {
       .select("sample_name", "probe_name", "value")
   }
 
-  /** Typed view of a COO matrix DataFrame — `Dataset[MatrixEntry]` with
-    * the case-class Encoder, for callers who want compile-time row
-    * types (`.map`/`.filter` over MatrixEntry instead of Row).
-    */
-  def typed(matrix: org.apache.spark.sql.DataFrame): org.apache.spark.sql.Dataset[MatrixEntry] = {
-    val spark = matrix.sparkSession
-    import spark.implicits._
-    matrix.select(
-      col("sample").cast("int").as("sample"),
-      col("probe").cast("int").as("probe"),
-      col("value").cast("double").as("value")).as[MatrixEntry]
-  }
-
   /** Deterministic dense-id dictionary over a name column: sorted, then
     * ids assigned by partition-local index + offset (zipWithIndex) — no
     * single-partition window, so the build distributes at any scale.
@@ -116,7 +101,7 @@ object Ingest {
       if (i > Int.MaxValue)
         throw new IllegalStateException(
           s"dictionary overflow: > ${Int.MaxValue} distinct $nameCol values " +
-            "(the pipeline's MatrixEntry ids are 32-bit, matching the reference's IndexType)")
+            "(the matrix's sample/probe ids are 32-bit INT, matching the reference's IndexType)")
       (n, i.toInt)
     }
     spark.createDataFrame(ids).toDF(nameCol, idCol)

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.graphx.{Edge, Graph}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -12,11 +12,11 @@ import org.apache.spark.storage.StorageLevel
   *  - The reference collects all per-probe stats to the driver and runs
   *    an O(P²) nested loop against the broadcast copy
   *    (`PreProcess.scala:56-79`), pairing the two value lists
-  *    positionally (quirk Q2). Here ΣXY comes from a self-join on the
-  *    sample key — alignment is explicit, the shuffle key is `sample`,
-  *    and partial aggregation is map-side combinable. Cost is
-  *    O(Σ_sample nnz_sample²) — the honest cost of all-pairs — but
-  *    distributed, with no driver copy.
+  *    positionally (quirk Q2). Here the co-moments come from a
+  *    self-join on the sample key — alignment is explicit, the shuffle
+  *    key is `sample`, and partial aggregation is map-side combinable.
+  *    Cost is O(Σ_sample nnz_sample²) — the honest cost of all-pairs
+  *    — but distributed, with no driver copy.
   *  - Connected components: GraphX `connectedComponents()` (Pregel,
   *    incremental frontier — same semantics as the reference's delta
   *    iteration `PreProcess.scala:179-197`, maxIter 100). A pure
@@ -27,13 +27,21 @@ import org.apache.spark.storage.StorageLevel
   */
 object Network {
 
+  /** Sample Pearson r of two columns as an aggregate, NULL (never a
+    * throw) on a zero-variance or single-row group: Spark's `corr`
+    * divides by the co-moment product with ANSI division, so it throws
+    * DIVIDE_BY_ZERO on any constant series. The co-moment aggregates
+    * update incrementally (no n·Σx² − (Σx)² cancellation) and combine
+    * map-side; `try_divide` NULLs the zero-variance case.
+    */
+  def pearson(x: Column, y: Column): Column =
+    try_divide(covar_samp(x, y), stddev_samp(x) * stddev_samp(y))
+
   /** Per-probe-pair Pearson r over a COO matrix (sample, probe, value),
-    * upper triangle only (pi < pj), NaN/Inf guarded, |r| >= threshold.
-    *
-    * r = (n·Σxy − Σx·Σy) / sqrt((n·Σx² − (Σx)²)(n·Σy² − (Σy)²))
-    * with n = number of samples where BOTH probes are present (on a
-    * completed matrix that is all samples — matching the reference,
-    * which only runs this after completion).
+    * upper triangle only (pi < pj), NaN guarded, |r| >= threshold, over
+    * the samples where BOTH probes are present (on a completed matrix
+    * that is all samples — matching the reference, which only runs
+    * this after completion).
     */
   def pearsonEdges(matrix: DataFrame, threshold: Double): DataFrame = {
     val a = matrix.select(
@@ -43,30 +51,13 @@ object Network {
     a.join(b, Seq("sample"))
       .filter(col("pi") < col("pj")) // F6 upper triangle
       .groupBy("pi", "pj")
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("x")).as("sx"),
-        sum(col("y")).as("sy"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("y") * col("y")).as("syy"),
-        sum(col("x") * col("y")).as("sxy"))
-      .withColumn(
-        "den",
-        sqrt(
-          (col("n") * col("sxx") - col("sx") * col("sx")) *
-            (col("n") * col("syy") - col("sy") * col("sy"))))
-      // F5 guard, ANSI-safe: a zero-variance probe gives den = 0 — the
-      // reference's NaN/Inf filter; under ANSI mode the division itself
-      // would throw, so gate it instead of filtering afterwards
-      .withColumn(
-        "r",
-        // least/greatest: fp guard against |r| overshooting 1 by ~1e-15
-        when(col("den") > 0.0,
-          least(lit(1.0), greatest(lit(-1.0),
-            (col("n") * col("sxy") - col("sx") * col("sy")) / col("den")))))
+      .agg(pearson(col("x"), col("y")).as("r"))
+      // F5: the reference's NaN/Inf filter — a zero-variance probe
+      // gives a NULL r. Before the clamp: greatest skips NULLs
       .filter(col("r").isNotNull && !isnan(col("r")))
+      // least/greatest: fp guard against |r| overshooting 1 by ~1e-15
+      .select(col("pi"), col("pj"), least(lit(1.0), greatest(lit(-1.0), col("r"))).as("r"))
       .filter(abs(col("r")) >= threshold)
-      .select("pi", "pj", "r")
   }
 
   /** Dense skinny-matrix Pearson: when the sample dimension is small

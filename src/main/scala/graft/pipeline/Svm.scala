@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.ml.classification.LinearSVC
-import org.apache.spark.ml.linalg.Vectors
+import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -31,7 +31,6 @@ object Svm {
     * conflicting observations would be silent data loss).
     */
   def assembleFeatures(matrix: DataFrame): DataFrame = {
-    val toVec = udf { (vs: Seq[Double]) => Vectors.dense(vs.toArray) }
     // localCheckpoint: the completeness count below is a full action
     // over this aggregation — the heaviest post-network stage — and the
     // caller's materialization would otherwise run it a SECOND time
@@ -54,7 +53,7 @@ object Svm {
       s"samples cover $sigs distinct probe sets — matrix incomplete (or a " +
         "duplicate (sample, probe) observation survived ingest); feature " +
         "positions would misalign")
-    assembled.select(col("sample"), toVec(col("values")).as("features"))
+    assembled.select(col("sample"), array_to_vector(col("values")).as("features"))
   }
 
   /** Train on the labeled subset (F1 semi-join on training ids),

@@ -9,9 +9,10 @@ class ViewsSpec extends SparkSpec {
         |FROM customer JOIN nation ON c_nationkey = n_nationkey
         |GROUP BY n_name ORDER BY n_cust DESC, n_name LIMIT 3""".stripMargin)
     assert(top.count() == 3)
-    // custom expression + UDAF reachable from SQL
+    // the built-in ANSI-safe Pearson form + custom expression from SQL
     val r = spark.sql(
-      """SELECT pearson_udaf(l_quantity, l_extendedprice) AS r,
+      """SELECT try_divide(covar_samp(l_quantity, l_extendedprice),
+        |         stddev_samp(l_quantity) * stddev_samp(l_extendedprice)) AS r,
         |       MAX(float_dot(array(CAST(1.0 AS FLOAT)), array(CAST(2.0 AS FLOAT)))) AS d
         |FROM lineitem""".stripMargin).head()
     assert(!r.isNullAt(0) && math.abs(r.getDouble(0)) <= 1.0)

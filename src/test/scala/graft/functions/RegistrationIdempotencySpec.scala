@@ -63,12 +63,10 @@ class RegistrationIdempotencySpec extends SparkSpec {
     // may or may not have seen these names already — irrelevant: after
     // this line they all exist, so the captured window is pure repeats)
     GraftFunctions.ensureRegistered(s)
-    PearsonAgg.register(s)
     SimhashAggs.register(s)
     graft.Views.register(s, "/root/testdata/sf0.001")
     val logs = captureWarnings {
       GraftFunctions.ensureRegistered(s)
-      PearsonAgg.register(s)
       SimhashAggs.register(s)
       graft.Views.register(s, "/root/testdata/sf0.001")
     }

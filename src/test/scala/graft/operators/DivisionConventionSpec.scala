@@ -495,6 +495,50 @@ class DivisionConventionSpec extends SparkSpec {
   }
 
   // ---------------------------------------------------------------- //
+  // the division inside an aggregate: Spark's corr                    //
+  // ---------------------------------------------------------------- //
+
+  /** `corr` (PearsonCorrelation) divides by the co-moment product with
+    * ANSI division INSIDE the aggregate's evaluation, where the Divide
+    * scan above cannot see it, and so throws DIVIDE_BY_ZERO on any
+    * constant series (a steady heartbeat metric, a flat probe). The
+    * ANSI-safe form is `Network.pearson`; no query is exempt. The one
+    * subclass that tests both co-moments for zero before dividing,
+    * `regr_r2` (q130, q178), is safe — red-proofed below.
+    */
+  private[operators] def pearsonCorrelations(df: DataFrame): Set[String] =
+    df.queryExecution.analyzed.collectWithSubqueries { case node =>
+      node.expressions.flatMap(_.collect {
+        case p: PearsonCorrelation if !p.isInstanceOf[RegrR2] => p.sql
+      })
+    }.flatten.toSet
+
+  test("(corr red-proof) the scan flags corr, which throws on a constant column; Network.pearson passes") {
+    val s = spark; import s.implicits._
+    val df = Seq((1.0, 5.0), (2.0, 5.0), (3.0, 5.0)).toDF("x", "y")
+    val viaCorr = df.agg(corr(col("x"), col("y")))
+    assert(pearsonCorrelations(viaCorr) == Set("corr(x, y)"))
+    assert(scala.util.Try(viaCorr.collect()).isFailure,
+      "corr no longer throws on a constant column — re-adjudicate the convention")
+    val viaHelper = df.agg(graft.pipeline.Network.pearson(col("x"), col("y")))
+    assert(pearsonCorrelations(viaHelper).isEmpty)
+    assert(viaHelper.head().isNullAt(0))
+    // regr_r2 with either column constant: no throw, so not flagged
+    val r2 = df.agg(regr_r2(col("y"), col("x")), regr_r2(col("x"), col("y")))
+    assert(pearsonCorrelations(r2).isEmpty)
+    val row = r2.head()
+    assert(row.getDouble(0) == 1.0 && row.isNullAt(1), s"regr_r2 on a constant column: $row")
+  }
+
+  test("no declared query plans Spark's corr") {
+    val offenders = PlanCensus.gate(Map.empty)(pearsonCorrelations)
+    assert(
+      offenders.isEmpty,
+      s"corr throws DIVIDE_BY_ZERO on a constant series under ANSI (use Network.pearson):\n  " +
+        offenders.mkString("\n  "))
+  }
+
+  // ---------------------------------------------------------------- //
   // the gate: every declared query                                   //
   // ---------------------------------------------------------------- //
 

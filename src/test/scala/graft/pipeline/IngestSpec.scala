@@ -79,14 +79,6 @@ class IngestSpec extends SparkSpec {
     assert(rows("hdr.txt") == want, "header line not dropped leniently")
   }
 
-  test("typed Dataset[MatrixEntry] view supports typed transforms") {
-    val s = spark; import s.implicits._
-    val df = Seq((0, 1, 2.5), (1, 0, 3.5)).toDF("sample", "probe", "value")
-    val ds = Ingest.typed(df)
-    assert(ds.filter(_.value > 3.0).map(_.sample).collect().toSeq == Seq(1))
-    assert(ds.orderBy("sample", "probe").head() == Ingest.MatrixEntry(0, 1, 2.5))
-  }
-
   test("end-to-end pipeline on separable mini-corpus: correct ±1 predictions (P4)") {
     val dir = Files.createTempDirectory("graft_corpus_e2e")
     val base = writeCorpus(dir, nTrain = 12, nPredict = 6, nProbes = 8)

@@ -1,6 +1,8 @@
 package graft.pipeline
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import org.scalatest.prop.TableDrivenPropertyChecks
 import scala.util.Random
 
@@ -51,6 +53,66 @@ class NetworkSpec extends SparkSpec with TableDrivenPropertyChecks {
     val edges = Network.pearsonEdges(cooDF(coo), 0.9).collect()
     assert(edges.map(r => (r.getInt(0), r.getInt(1))).toSet == Set((0, 2)))
     assert(math.abs(edges.head.getDouble(2) - 1.0) < 1e-9)
+  }
+
+  test("pearson helper: NULL, not a throw, on a constant column and on n = 1; corr's value otherwise") {
+    val s = spark; import s.implicits._
+    val rnd = new Random(29)
+    val random = (0 until 2000).map { _ =>
+      val x = rnd.nextGaussian(); (0, x, 0.6 * x + rnd.nextGaussian())
+    }
+    val constant = (0 until 50).map(i => (1, i.toDouble, 5.0))
+    val single = Seq((2, 1.0, 2.0))
+    val got = (random ++ constant ++ single).toDF("g", "x", "y")
+      .groupBy("g").agg(Network.pearson(col("x"), col("y")).as("r"))
+      .collect().map(r => r.getInt(0) -> r).toMap
+    assert(got(1).isNullAt(1), "constant column must give NULL")
+    assert(got(2).isNullAt(1), "a single-row group must give NULL")
+    val viaCorr = random.toDF("g", "x", "y").agg(corr("x", "y")).head().getDouble(0)
+    assert(math.abs(got(0).getDouble(1) - viaCorr) < 1e-12, s"${got(0)} vs corr $viaCorr")
+  }
+
+  /** Writes `df` as the one fixture table `name` of a fresh directory,
+    * runs `body` on it, then removes it.
+    */
+  private def withTable(name: String, df: DataFrame)(body: String => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_const_series")
+    try {
+      df.write.parquet(s"$dir/$name.parquet")
+      body(dir.toString)
+    } finally graft.GraftSession.rmTree(dir.toFile)
+  }
+
+  test("q19 gives a NULL r, not DIVIDE_BY_ZERO, for a return flag whose tax never varies") {
+    val s = spark; import s.implicits._
+    val lineitem = Seq(
+      ("A", 1.0, 10.0, 0.01, 0.05), ("A", 2.0, 19.0, 0.02, 0.05), ("A", 3.0, 31.0, 0.04, 0.05),
+      ("N", 1.0, 12.0, 0.01, 0.02), ("N", 4.0, 40.0, 0.03, 0.06), ("N", 2.0, 21.0, 0.02, 0.01))
+      .toDF("l_returnflag", "l_quantity", "l_extendedprice", "l_discount", "l_tax")
+    withTable("lineitem", lineitem) { dir =>
+      val got = SparkEntry.queries("q19_corr")(s, dir)
+        .collect().map(r => r.getString(0) -> r).toMap
+      assert(got("A").isNullAt(2), s"constant l_tax: ${got("A")}")
+      assert(!got("A").isNullAt(1) && !got("N").isNullAt(1) && !got("N").isNullAt(2))
+    }
+  }
+
+  test("q193 gives a NULL r, not DIVIDE_BY_ZERO, for an event type with the same count every day") {
+    val s = spark; import s.implicits._
+    // per day d: 3 heartbeats (constant), d + 1 clicks, 2(d + 1) views
+    val events = (0 until 6).flatMap { d =>
+      (Seq.fill(3)("heartbeat") ++ Seq.fill(d + 1)("click") ++ Seq.fill(2 * (d + 1))("view"))
+        .map(t => (t, new java.sql.Timestamp(d * 86400000L + 3600000L)))
+    }.zipWithIndex.map { case ((t, ts), i) => (i.toLong, ts, 1L, t, 1.0, "{}") }
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    withTable("events", events) { dir =>
+      val got = SparkEntry.queries("q193_metric_corr")(s, dir)
+        .collect().map(r => (r.getString(0), r.getString(1)) -> r).toMap
+      assert(got.keySet == Set(("click", "heartbeat"), ("click", "view"), ("heartbeat", "view")))
+      assert(got.values.forall(_.getLong(2) == 6L))
+      assert(got(("click", "heartbeat")).isNullAt(3) && got(("heartbeat", "view")).isNullAt(3))
+      assert(got(("click", "view")).getDouble(3) == 1.0)
+    }
   }
 
   test("pearsonEdgesDense matches relational pearsonEdges on a complete matrix") {

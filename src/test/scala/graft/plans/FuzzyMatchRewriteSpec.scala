@@ -3,10 +3,11 @@ package graft.plans
 import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.catalyst.expressions.Levenshtein
 
-/** Gates for the FuzzyMatchRewrite optimizer rule: the q92 plan must
-  * carry the banded (thresholded) Levenshtein + length guard, and the
-  * rewritten query must return exactly the rows the un-rewritten one
-  * does (the rule is a pure pruning/strength-reduction rewrite).
+/** Gates for q92's fuzzy-match predicate, written as a length guard +
+  * the built-in thresholded (banded) Levenshtein: the optimized plan
+  * must carry both, and the query must return exactly the rows of the
+  * plain `levenshtein(a, b) <= 14` form (the guard and the threshold
+  * are pure pruning/strength reduction).
   */
 class FuzzyMatchRewriteSpec extends SparkSpec {
 
@@ -17,67 +18,39 @@ class FuzzyMatchRewriteSpec extends SparkSpec {
     val optimized = df.queryExecution.optimizedPlan
     val levs = optimized.collect { case p => p }.flatMap(_.expressions)
       .flatMap(_.collect { case l: Levenshtein => l })
-    assert(levs.exists(_.threshold.isDefined),
-      s"no thresholded levenshtein in:\n$optimized")
+    // the projected distance too: the full O(m·n) DP runs nowhere
+    assert(levs.nonEmpty && levs.forall(_.threshold.isDefined),
+      s"missing or unthresholded levenshtein in:\n$optimized")
     val s = optimized.toString
     // (a past copy-paste had this condition OR'd with itself — one
     // spelling is the real gate)
     assert(s.contains("abs((length("), s"no length guard in:\n$s")
   }
 
-  test("nondeterministic operands get the banded DP but NOT the duplicating length guard") {
-    import org.apache.spark.sql.functions._
-    val s = spark
-    GraftRules.ensureInjected(s)
-    // uuid() is nondeterministic: the old rewrite duplicated it into
-    // Length (guard) and the DP — two independent evaluations of a
-    // different string, so the guard could pass/fail rows the DP
-    // disagrees with. The banded threshold alone evaluates each operand
-    // once and is always sound. Parquet-backed frame: a LocalRelation
-    // would be constant-folded before the Filter survives to assert on.
-    val df = graft.Tables(s, dir, "documents")
-      .filter(expr("levenshtein(concat(lang, substr(uuid(), 0, 0)), source) <= 2"))
-    val optimized = df.queryExecution.optimizedPlan
-    val levs = optimized.expressions
-      .flatMap(_.collect { case l: org.apache.spark.sql.catalyst.expressions.Levenshtein => l })
-    assert(levs.exists(_.threshold.isDefined),
-      s"banded DP must still fire:\n$optimized")
-    assert(!optimized.toString.contains("abs((length("),
-      s"duplicating guard on a nondeterministic operand:\n$optimized")
-    // deterministic operands keep the guard (the q92 plan gate above)
-  }
-
   test("rewrite preserves the result set exactly") {
     import org.apache.spark.sql.functions._
-    val withRule = SparkEntry.queries("q92_fuzzy_dedup")(spark, dir)
+    val banded = SparkEntry.queries("q92_fuzzy_dedup")(spark, dir)
       .collect().map(_.toSeq).toSet
-    // independent un-rewritten build while the rule is stripped (the
-    // SparkEntry query would re-inject it, so rebuild the frame here).
-    // The baseline mirrors q92's CURRENT blocking — (lang, tok1) plus
-    // the prefix-SimHash band dimension — so the ONLY difference under
-    // test is the optimizer rule being on or off; q92's blocking
-    // semantics themselves are gated by the DuckDB oracle, not here.
-    val saved = spark.experimental.extraOptimizations
-    try {
-      spark.experimental.extraOptimizations =
-        saved.filterNot(_ == FuzzyMatchRewrite)
-      val blocks = graft.operators.DedupOps.fuzzyBlocks(spark, dir)
-      val withoutRule = blocks.as("a")
-        .join(
-          blocks.as("b"),
-          col("a.lang") === col("b.lang") && col("a.tok1") === col("b.tok1") &&
-            col("a.b") === col("b.b") && col("a.bv") === col("b.bv") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(
-          col("a.doc_id").as("da"), col("b.doc_id").as("db"),
-          col("a.p").as("pa"), col("b.p").as("pb"))
-        .distinct()
-        .withColumn("dist", levenshtein(col("pa"), col("pb")).cast("bigint"))
-        .filter(col("dist") <= 14)
-        .select(col("da"), col("db"), col("dist"))
-        .collect().map(_.toSeq).toSet
-      assert(withRule == withoutRule)
-      assert(withRule.nonEmpty) // non-vacuous at the dev scale too
-    } finally spark.experimental.extraOptimizations = saved
+    // The unthresholded reference mirrors q92's blocking — (lang, tok1)
+    // plus the prefix-SimHash band dimension — so the ONLY difference
+    // under test is the predicate form; q92's blocking semantics
+    // themselves are gated by the DuckDB oracle, not here.
+    val blocks = graft.operators.DedupOps.fuzzyBlocks(spark, dir)
+    val plain = blocks.as("a")
+      .join(
+        blocks.as("b"),
+        col("a.lang") === col("b.lang") && col("a.tok1") === col("b.tok1") &&
+          col("a.b") === col("b.b") && col("a.bv") === col("b.bv") &&
+          col("a.doc_id") < col("b.doc_id"))
+      .select(
+        col("a.doc_id").as("da"), col("b.doc_id").as("db"),
+        col("a.p").as("pa"), col("b.p").as("pb"))
+      .distinct()
+      .withColumn("dist", levenshtein(col("pa"), col("pb")).cast("bigint"))
+      .filter(col("dist") <= 14)
+      .select(col("da"), col("db"), col("dist"))
+      .collect().map(_.toSeq).toSet
+    assert(banded == plain)
+    assert(banded.nonEmpty) // non-vacuous at the dev scale too
   }
 }
